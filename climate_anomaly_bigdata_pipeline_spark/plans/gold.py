@@ -15,8 +15,11 @@ lineitem revenue plays the anomaly series:
 
 Fixes over the reference (SURVEY §4): the fact plan is computed once
 and cached at the fact→extremes reuse point instead of re-deriving the
-whole lineage per output, and gold writes partition by year for
-partition pruning at scale.
+whole lineage per output. When written, the gold layout follows
+:func:`~climate_anomaly_bigdata_pipeline_spark.plans.medallion.write_gold`:
+only the fact is partitioned by year (for partition pruning at scale),
+the partitioned sink rebalances on year so each year gets one file at
+small scale, and the four outputs are written concurrently.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,11 +37,29 @@ def write_parquet(
     """Parquet sink (S5). Pass ``partition_by`` for gold-layer facts —
     the reference writes unpartitioned (SURVEY §4), which forfeits
     partition pruning; at 100 TB always partition on the prune key
-    (e.g. year)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    (e.g. year); the write is rebalanced first (:func:`_writer`)."""
+    _writer(df, mode, partition_by).parquet(path)
+
+
+def _writer(
+    df: DataFrame, mode: str, partition_by: Sequence[str]
+) -> DataFrameWriter:
+    """The ``DataFrameWriter`` of a file sink. A partitioned write is
+    shuffled on its partition columns first.
+
+    Without that shuffle every upstream task writes its own file into
+    every partition directory it holds rows for, so files = tasks ×
+    values (4 tasks × 24 years = 96 files for a few thousand rows). The
+    ``rebalance`` hint puts each value's rows in one task; with AQE on
+    it coalesces the small shuffle partitions and splits a skewed one
+    into ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` pieces, so
+    a small table gets one file per value and a 100 TB one gets files
+    of the advisory size."""
+    if not partition_by:
+        return df.write.mode(mode)
+    return df.hint("rebalance", *partition_by).write.mode(mode).partitionBy(
+        *partition_by
+    )
 
 
 def write_single_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -122,11 +140,9 @@ def write_jsonl(
     """JSON-lines sink (one JSON object per line, the lingua franca of
     LLM training-data interchange). Splittable and append-friendly like
     the parquet sink; prefer parquet between layers (typed, columnar,
-    ~5-10x smaller) and JSONL only at ingest/egress edges."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
+    ~5-10x smaller) and JSONL only at ingest/egress edges. Partitioned
+    writes are rebalanced like :func:`write_parquet`'s."""
+    _writer(df, mode, partition_by).json(path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:

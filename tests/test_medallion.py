@@ -3,7 +3,10 @@ fixtures (FIXTURES.md group A): raw text → bronze → silver → gold."""
 
 from __future__ import annotations
 
+import glob
 import os
+import uuid
+from collections import Counter
 
 import pytest
 
@@ -121,13 +124,59 @@ def test_medallion_end_to_end(spark, raw_dir, tmp_path_factory):
     extremes = gold["climate_extremes"].collect()
     assert all(r["event_type"] in ("EXTREME_HEAT", "EXTREME_COLD") for r in extremes)
 
-    # gold writes: parquet partitioned by year + single-file CSV export
+    # gold writes: only the fact is partitioned by year, one file per
+    # year; every output gets a single-file CSV export
     M.write_gold(gold, paths)
-    import glob
 
     fact_dir = os.path.join(paths.gold, "climate_anomalies_monthly")
     assert glob.glob(os.path.join(fact_dir, "year=2000", "*.parquet"))
-    csvs = glob.glob(os.path.join(paths.gold, "climate_kpis_csv", "*.csv"))
-    assert len(csvs) == 1  # coalesce(1) single file
-    header = open(csvs[0]).readline().strip().split(",")
-    assert "avg_global_anomaly" in header
+    year_dirs = glob.glob(os.path.join(fact_dir, "year=*"))
+    assert {os.path.basename(d) for d in year_dirs} == {"year=2000", "year=2001"}
+    for d in year_dirs:
+        assert len(glob.glob(os.path.join(d, "part-*"))) == 1, d
+    for name in ("climate_kpis", "stations_dim", "climate_extremes"):
+        assert not glob.glob(os.path.join(paths.gold, name, "year=*")), name
+
+    for name, df in gold.items():
+        table = spark.read.parquet(os.path.join(paths.gold, name))
+        csvs = glob.glob(os.path.join(paths.gold, f"{name}_csv", "*.csv"))
+        assert len(csvs) == 1, name  # coalesce(1) single file
+        with open(csvs[0]) as f:
+            assert f.readline().strip().split(",") == df.columns, name
+        table = table.select(*df.columns)
+        exported = (
+            spark.read.schema(table.schema).option("header", "true").csv(csvs[0])
+        )
+        assert Counter(map(tuple, exported.collect())) == Counter(
+            map(tuple, table.collect())
+        ), name
+
+
+def test_write_gold_jobs_keep_callers_job_group(spark, raw_dir, tmp_path):
+    """write_gold's writer threads inherit the caller's job group: every
+    Parquet and CSV write job is attributed to it (a plain thread would
+    start with empty local properties and lose them)."""
+    silver_b, _ = M.bronze_to_silver_berkeley(
+        M.ingest_bronze(
+            spark, os.path.join(raw_dir, "berkeley_daily.txt"), "berkeley_earth"
+        )
+    )
+    silver_s, _ = M.bronze_to_silver_stations(
+        M.ingest_bronze(
+            spark, os.path.join(raw_dir, "ghcnd_stations.txt"), "noaa_ghcnd"
+        )
+    )
+    gold = M.silver_to_gold(silver_b, silver_s, station_limit=2, z_threshold=1.0)
+    sc = spark.sparkContext
+    group = f"write-gold-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "write_gold job-group propagation")
+    try:
+        M.write_gold(gold, M.MedallionPaths(str(tmp_path)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        gold["climate_anomalies_monthly"].unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # at least one job per sink: a Parquet and a CSV write per output
+    assert len(jobs) >= 2 * len(gold)

@@ -40,16 +40,11 @@ def test_priority_window_rotation():
     )
     padding = window - set(_R14_CODE_CHANGED) - {"zscore_anomaly"}
     # padding is strictly re-verification: every name already has a
-    # driver-green row in some committed CORRECTNESS artifact
-    import glob
-    import json
-    import os
+    # green row (rows and schema match, no error) in some committed
+    # CORRECTNESS artifact, counted the way tools/gen_coverage.py does
+    from tools.gen_coverage import driver_rounds
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    verified: set[str] = set()
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            verified |= set(json.load(f))
+    verified = set(driver_rounds("worktree"))
     assert padding <= verified, (
         "padding must be re-verification of driver-green names"
     )
