@@ -14,8 +14,9 @@ the formatted plan for scale antipatterns:
 - scans with no column pruning (ReadSchema equal to the full table
   schema is fine for profile queries; reported, not failed)
 
-Prints one line per finding plus a summary; exit 1 only on the hard
-antipatterns (cartesian). Use as a regression backstop:
+Prints one line per finding plus a summary; exit 1 on a hard
+antipattern (cartesian) or on a query that fails to build, which
+includes an unknown name. Use as a regression backstop:
 
     python tools/plan_audit.py [sf_dir] [name ...]
 """
@@ -69,11 +70,12 @@ def main() -> int:
     names = args[1:] if len(args) > 1 else list(QUERIES)
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    hard = 0
+    hard = errors = 0
     for name in names:
         try:
             plan = plan_of(QUERIES[name](spark, sf_dir))
         except Exception as e:  # noqa: BLE001
+            errors += 1
             print(f"ERROR {name}: {type(e).__name__}: {e}")
             continue
         findings = audit(name, plan)
@@ -87,8 +89,9 @@ def main() -> int:
             if tag == "HARD":
                 hard += 1
             print(f"{tag} {name}: {f}")
-    print(f"audited {len(names)} queries, hard findings: {hard}")
-    return 1 if hard else 0
+    print(f"audited {len(names)} queries, hard findings: {hard}, "
+          f"build errors: {errors}")
+    return 1 if hard or errors else 0
 
 
 if __name__ == "__main__":
