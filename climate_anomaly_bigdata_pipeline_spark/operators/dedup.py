@@ -24,12 +24,12 @@ similarity threshold via the standard S-curve.
 
 from __future__ import annotations
 
-import os as _os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from climate_anomaly_bigdata_pipeline_spark.operators import graph as G
 from climate_anomaly_bigdata_pipeline_spark.operators.text import tokens_expr
 
 
@@ -692,23 +692,11 @@ def simhash(
     return sums.select(F.col(id_col), sim.alias("simhash"))
 
 
-# Edge-count ceiling for the driver-local CC fastpath (see
-# _cc_local_labels): 8M edges = two 64 MB int64 arrays on the driver —
-# the same order of memory a broadcast-join hash relation is allowed.
-# Override with SPARK_GRAFT_CC_LOCAL_MAX_EDGES (0 disables the
-# fastpath entirely).
-_CC_LOCAL_MAX_EDGES = int(
-    _os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", str(8_000_000))
-)
-
-_CC_LOCAL_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
-
-
-def _cc_local_labels(
-    edges: DataFrame, u_col: str, v_col: str
-) -> DataFrame:
+def _cc_local_labels(edges: DataFrame, u, v) -> DataFrame:
     """(node, cluster_id = component min) for every node incident to an
-    edge, solved ON THE DRIVER with numpy min-label + pointer doubling.
+    edge of the collected int64 arrays ``u``/``v`` (from
+    :func:`operators.graph._local_edges` over the pinned ``edges``),
+    solved ON THE DRIVER with numpy min-label + pointer doubling.
 
     This is the bounded small-graph endgame of distributed CC — the
     same posture as a broadcast join: below a size threshold the edge
@@ -717,33 +705,23 @@ def _cc_local_labels(
     per-round fixed cost (3 exchanges + job scheduling) dominates at
     any data size the threshold admits. Exact integer min-label math —
     the labels are identical to the distributed fixpoint's, and the
-    caller's threshold gate keeps graphs above the ceiling on the
-    distributed loop, so no 100 TB path ever collects here.
+    shared gate keeps graphs above the ceiling on the distributed loop,
+    so no 100 TB path ever collects here.
     """
     import numpy as np
     import pandas as pd
 
-    spark = edges.sparkSession
-    node_dt = edges.schema[u_col].dataType.simpleString()
-    pdf = edges.select(
-        F.col(u_col).cast("long").alias("u"),
-        F.col(v_col).cast("long").alias("v"),
-    ).toPandas()
-    u = pdf["u"].to_numpy(dtype=np.int64, copy=False)
-    v = pdf["v"].to_numpy(dtype=np.int64, copy=False)
-    nodes = np.unique(np.concatenate([u, v]))
-    a = np.searchsorted(nodes, u)
-    b = np.searchsorted(nodes, v)
+    node_dt = edges.schema[0].dataType
+    nodes, si, di = G._local_index(u, v)
     lab = np.arange(len(nodes), dtype=np.int64)
-    # Outer: relax every edge to the min of its endpoints' labels.
-    # Inner: pointer-double the label forest to its roots. A path of
-    # diameter d fully compresses in O(log d) doublings; the outer
-    # loop re-relaxes until no edge changes anything (>=2 passes).
+    # Outer: relax every edge to the min of its endpoints' labels (the
+    # index is bidirectional, so relaxing each row's source covers both
+    # endpoints). Inner: pointer-double the label forest to its roots.
+    # A path of diameter d fully compresses in O(log d) doublings; the
+    # outer loop re-relaxes until no edge changes anything (>=2 passes).
     while True:
-        m = np.minimum(lab[a], lab[b])
         before = lab.copy()
-        np.minimum.at(lab, a, m)
-        np.minimum.at(lab, b, m)
+        np.minimum.at(lab, si, np.minimum(lab[si], lab[di]))
         changed = not np.array_equal(lab, before)
         while True:
             nxt = lab[lab]
@@ -753,23 +731,12 @@ def _cc_local_labels(
         if not changed:
             break
     out = pd.DataFrame({"node": nodes, "cluster_id": nodes[lab]})
-    return spark.createDataFrame(
+    return edges.sparkSession.createDataFrame(
         out, schema="node bigint, cluster_id bigint"
     ).select(
         F.col("node").cast(node_dt).alias("node"),
         F.col("cluster_id").cast(node_dt).alias("cluster_id"),
     )
-
-
-def _cc_local_eligible(edges: DataFrame, u_col: str, local_max_edges: int) -> bool:
-    """Gate for the driver-local fastpath: integral node ids and an
-    edge count under the ceiling. The count is one job over the
-    caller's already-checkpointed edge blocks."""
-    if local_max_edges <= 0:
-        return False
-    if edges.schema[u_col].dataType.simpleString() not in _CC_LOCAL_INT_TYPES:
-        return False
-    return edges.limit(local_max_edges + 1).count() <= local_max_edges
 
 
 def connected_components(
@@ -798,10 +765,12 @@ def connected_components(
     O(log^2 n) rounds regardless of diameter.
 
     ``local_max_edges`` (default $SPARK_GRAFT_CC_LOCAL_MAX_EDGES, 8M)
-    gates a driver-local endgame: when the deduped edge set is under
-    the ceiling, labels come from one Arrow collect + numpy min-label
-    (see :func:`_cc_local_labels`) instead of the shuffle rounds —
-    identical integer labels, broadcast-join-sized driver memory.
+    is the ceiling of the driver-local endgame shared with the other
+    graph fixpoints (:func:`operators.graph._local_edges`): when the
+    deduped edge set is under it, labels come from one bounded Arrow
+    collect + numpy min-label (see :func:`_cc_local_labels`) instead of
+    the shuffle rounds — identical integer labels, broadcast-join-sized
+    driver memory.
     """
     # Orient + distinct FIRST and checkpoint that half-sized set: the
     # old bidirectional union referenced the caller's pair subtree
@@ -818,10 +787,9 @@ def connected_components(
         .localCheckpoint()
     )
 
-    if local_max_edges is None:
-        local_max_edges = _CC_LOCAL_MAX_EDGES
-    if _cc_local_eligible(half, "src", local_max_edges):
-        return _cc_local_labels(half, "src", "dst")
+    local = G._local_edges(half, local_max_edges)
+    if local is not None:
+        return _cc_local_labels(half, *local)
 
     edges = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -914,12 +882,13 @@ def connected_components_star(
     (``tests/test_round4_ops.py``).
 
     ``local_max_edges`` (default $SPARK_GRAFT_CC_LOCAL_MAX_EDGES, 8M)
-    gates the driver-local endgame (:func:`_cc_local_labels`): under
-    the ceiling, one Arrow collect + numpy min-label/pointer-doubling
-    replaces the star rounds entirely — the Kiveris-family papers'
-    own "finish in memory once the graph is small" move, with
-    identical integer labels. Above the ceiling the distributed
-    O(log² n)-round loop below runs unchanged.
+    gates the shared driver-local endgame
+    (:func:`operators.graph._local_edges`, :func:`_cc_local_labels`):
+    under the ceiling, one bounded Arrow collect + numpy
+    min-label/pointer-doubling replaces the star rounds entirely — the
+    Kiveris-family papers' own "finish in memory once the graph is
+    small" move, with identical integer labels. Above the ceiling the
+    distributed O(log² n)-round loop below runs unchanged.
     """
     # Checkpoint the oriented-distinct pair set BEFORE dropping
     # self-loops, so the node set can be derived from the checkpointed
@@ -943,10 +912,9 @@ def connected_components_star(
     )
     edges = edges0.filter(F.col("u") != F.col("v"))
 
-    if local_max_edges is None:
-        local_max_edges = _CC_LOCAL_MAX_EDGES
-    if _cc_local_eligible(edges, "u", local_max_edges):
-        labels = _cc_local_labels(edges, "u", "v").withColumnRenamed(
+    local = G._local_edges(edges, local_max_edges)
+    if local is not None:
+        labels = _cc_local_labels(edges, *local).withColumnRenamed(
             "node", "__cc_node"
         )
         return nodes.join(

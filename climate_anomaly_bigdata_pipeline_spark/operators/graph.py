@@ -1,4 +1,6 @@
-"""Iterative graph analytics on DataFrames: PageRank, triangle counting.
+"""Iterative graph analytics on DataFrames: PageRank, triangle counting,
+BFS, k-core peeling, and the driver-local endgame shared by the graph
+fixpoints that can finish on the driver.
 
 Connected components (the dedup workhorse) lives in
 ``operators/dedup.py``; this module adds the rank-propagation family.
@@ -8,6 +10,17 @@ destination), lineage truncated with lazy ``localCheckpoint`` so the
 plan doesn't grow by a join per round. At 100 TB: pre-partition edges
 and ranks by node id so the per-round join is co-partitioned, swap
 ``localCheckpoint`` for reliable ``checkpoint``.
+
+Fixpoints whose depth is data-dependent (:func:`k_core` and the two
+connected-components operators in ``operators/dedup.py``) share one
+size-gated endgame, :func:`_local_edges`: over the pinned 2-column edge
+set, one bounded Arrow collect either brings the whole graph to the
+driver (integral node ids, at most ``_CC_LOCAL_MAX_EDGES`` rows) and
+the fixpoint finishes in numpy on :func:`_local_index` with the
+distributed loop's exact semantics, or declines, and the shuffle rounds
+run from the same pinned blocks. :func:`bfs_distances` keeps its
+shuffle rounds at every size. Below the ceiling a round's cost is job scheduling, not
+computation, so one collect replaces a few eager jobs per round.
 
 Engine-parity contract (same recipe as the IVF codebook training):
 per-destination contribution sums run in DECIMAL(30,18) — exact and
@@ -19,8 +32,99 @@ An external SQL oracle reproduces the iterations verbatim
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Edge-row ceiling for the driver-local graph endgame (_local_edges).
+# Its three consumers are k_core, dedup.connected_components and
+# dedup.connected_components_star. At the ceiling the collected rows
+# are two 64 MB int64 arrays; the index built on them (_local_index)
+# peaks at about 0.75 GB more, so the Python driver grows by about
+# 1 GB in all. Measured on a random graph of 7.9M edges over 2M nodes,
+# local[4] on a 4-core Xeon: k_core takes 22.6 s locally against
+# 66.1 s distributed. Override with SPARK_GRAFT_CC_LOCAL_MAX_EDGES (0
+# disables the endgame entirely).
+_CC_LOCAL_MAX_EDGES = int(
+    os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", str(8_000_000))
+)
+
+_LOCAL_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
+
+
+def _local_admits(edges: DataFrame, max_edges: int | None = None) -> bool:
+    """The part of the endgame's gate the schema decides, without a
+    job: a positive ceiling and integral ids in both columns. Callers
+    whose distributed loop reads ``edges`` only once pin them only when
+    this holds, because only then does the bounded collect read them
+    first."""
+    if max_edges is None:
+        max_edges = _CC_LOCAL_MAX_EDGES
+    return max_edges > 0 and all(
+        f.dataType.simpleString() in _LOCAL_INT_TYPES for f in edges.schema
+    )
+
+
+def _local_edges(
+    edges: DataFrame, max_edges: int | None = None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Gate and collect of the driver-local endgame, as ONE job.
+
+    ``edges`` is a 2-column edge set over blocks the caller pinned
+    with ``localCheckpoint``. Returns its two columns as int64 numpy
+    arrays when :func:`_local_admits` holds, no id is null and the set has at
+    most ``max_edges`` rows (default ``_CC_LOCAL_MAX_EDGES``), else
+    ``None``. The size gate is the collect itself —
+    ``limit(max_edges + 1)`` over the pinned blocks — so a graph under
+    the ceiling costs one Arrow collect. A graph above it costs that
+    job too: up to ``max_edges + 1`` rows reach the driver and are
+    discarded before the caller's distributed loop runs from the same
+    pinned blocks. A lazy pin (``eager=False``) is materialized by this
+    collect, which saves the count job an eager pin runs.
+    """
+    if max_edges is None:
+        max_edges = _CC_LOCAL_MAX_EDGES
+    if not _local_admits(edges, max_edges):
+        return None
+    pdf = (
+        edges.select(
+            *[F.col(c).cast("long").alias(a) for c, a in zip(edges.columns, "ab")]
+        )
+        .limit(max_edges + 1)
+        .toPandas()
+    )
+    if len(pdf) > max_edges or pdf.isna().to_numpy().any():
+        return None
+    return (
+        pdf["a"].to_numpy(dtype=np.int64),
+        pdf["b"].to_numpy(dtype=np.int64),
+    )
+
+
+def _local_index(
+    a: np.ndarray, b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Node index of the collected endpoint arrays, for the numpy
+    finishes. ``nodes`` is the sorted set of endpoints of every row,
+    self-loop rows included. ``si``/``di`` index into ``nodes`` and
+    hold the bidirectional, self-loop-free, distinct edge set, the set
+    the distributed :func:`k_core` loop builds in Spark. Each pair is
+    oriented and keyed as one int64 and deduplicated before it is
+    mirrored, so the second sort runs over one key per collected row,
+    not over mirrored row pairs. The inverse comes from the first sort: a binary search of
+    every endpoint into ``nodes`` is several times slower once
+    ``nodes`` outgrows the CPU caches."""
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a) :]
+    edge = ia != ib
+    key = np.unique(
+        np.minimum(ia, ib)[edge] * len(nodes) + np.maximum(ia, ib)[edge]
+    )
+    lo, hi = np.divmod(key, len(nodes))
+    return nodes, np.concatenate([lo, hi]), np.concatenate([hi, lo])
 
 
 def pagerank(
@@ -442,47 +546,87 @@ def k_core(
     peeling, the degeneracy primitive behind dense-community and spam
     detection).
 
-    Per round: one grouped degree count + two anti-joins removing the
-    peeled endpoints — every step an equi-shuffle on node id, so
-    bucketing edges by node makes rounds exchange-free (the same
-    posture as :func:`bfs_distances` / the star CC rounds), and
-    ``localCheckpoint`` truncates the growing lineage. Rounds are
-    data-dependent but bounded by the longest peeling chain; the loop
-    early-exits the first round nothing peels. Work per round is
-    O(remaining edges), never O(V²).
+    The edge list is made bidirectional, self-loops dropped and
+    duplicates removed (in numpy on the local path, by one shuffle on
+    the distributed one). Each round peels EVERY node whose degree is
+    below ``k`` at the same time (synchronous rounds), for at most
+    ``max_rounds`` rounds; the loop exits early the first round
+    nothing peels. Two paths run that same rule:
+
+    * under the driver-local ceiling (:func:`_local_edges`: integral
+      node ids, at most ``_CC_LOCAL_MAX_EDGES`` rows), one bounded
+      collect brings the edge list to the driver and the peel runs in
+      numpy — a fixed few jobs whatever the number of rounds;
+    * above it, each round is one grouped degree count (pinned once,
+      then probed for emptiness on the pinned blocks) + two anti-joins
+      removing the peeled endpoints — every step an equi-shuffle on
+      node id, so bucketing edges by node makes rounds exchange-free,
+      and ``localCheckpoint`` truncates the growing lineage. Work per
+      round is O(remaining edges), never O(V²).
+
+    When the ids are integral the edge list is pinned lazily first, so
+    a graph that turns out to be above the ceiling builds its
+    distributed set from the blocks the collect materialized instead
+    of replaying the caller's plan. That path therefore holds one more
+    pinned copy of the edge list and pays for the discarded collect of
+    up to ``_CC_LOCAL_MAX_EDGES`` rows.
 
     Returns ``(node, degree)`` for the surviving core (degree within
-    the core, >= k by construction).
+    the core, >= k at the fixpoint); ``node`` keeps the input's node
+    type and ``degree`` is bigint. ``kcore_rounds`` on the result is
+    the number of rounds that peeled something, identical on both
+    paths.
     """
-    bidir = (
-        edges.select(F.col(u_col).alias("s"), F.col(v_col).alias("d"))
-        .union(edges.select(F.col(v_col).alias("s"), F.col(u_col).alias("d")))
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    cur = bidir
+    st = edges.select(F.col(u_col).alias("s"), F.col(v_col).alias("d"))
+    if _local_admits(st):
+        st = st.localCheckpoint(eager=False)
     rounds_used = 0
-    for _ in range(max_rounds):
-        low = (
-            cur.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") < k)
-            .select("s")
-        )
-        if low.isEmpty():
-            break
-        rounds_used += 1
-        low = low.localCheckpoint()
-        lx = low.withColumnRenamed("s", "x")
+    local = _local_edges(st)
+    if local is not None:
+        nodes, si, di = _local_index(*local)
+        alive = np.ones(len(si), dtype=bool)
+        deg = np.bincount(si, minlength=len(nodes))
+        for _ in range(max_rounds):
+            # deg == 0 nodes have left the graph (or only ever had
+            # self-loops); the distributed degree count never sees them
+            low = (deg > 0) & (deg < k)
+            if not low.any():
+                break
+            rounds_used += 1
+            alive &= ~(low[si] | low[di])
+            deg = np.bincount(si[alive], minlength=len(nodes))
+        keep = deg > 0
+        out = st.sparkSession.createDataFrame(
+            pd.DataFrame({"node": nodes[keep], "degree": deg[keep]}),
+            "node bigint, degree bigint",
+        ).select(F.col("node").cast(st.schema["s"].dataType), "degree")
+    else:
         cur = (
-            cur.join(lx, cur.s == lx.x, "left_anti")
-            .join(lx, F.col("d") == lx.x, "left_anti")
+            st.union(st.select(F.col("d").alias("s"), F.col("s").alias("d")))
+            .where(F.col("s") != F.col("d"))
+            .distinct()
             .localCheckpoint()
         )
-    out = cur.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
+        for _ in range(max_rounds):
+            low = (
+                cur.groupBy("s")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .filter(F.col("deg") < k)
+                .select("s")
+                .localCheckpoint()
+            )
+            if low.isEmpty():
+                break
+            rounds_used += 1
+            lx = low.withColumnRenamed("s", "x")
+            cur = (
+                cur.join(lx, cur.s == lx.x, "left_anti")
+                .join(lx, F.col("d") == lx.x, "left_anti")
+                .localCheckpoint()
+            )
+        out = cur.groupBy(F.col("s").alias("node")).agg(
+            F.count(F.lit(1)).alias("degree")
+        )
     # Peeling rounds actually executed (fixpoint depth) — exposed so
     # callers with a fixed-unroll oracle can assert a safety margin.
     out.kcore_rounds = rounds_used

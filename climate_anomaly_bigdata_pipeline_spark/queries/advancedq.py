@@ -973,8 +973,11 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     degeneracy primitive for dense-community extraction. Engine loops
     with early exit; the oracle unrolls {_KCORE_ROUNDS} peeling rounds
     (fixpoint measured at 5 at sf0.1, extra rounds are no-ops).
-    Every round is an equi-shuffle (degree count + two anti-joins), so
-    node-bucketed edges make rounds exchange-free at scale."""
+    Under the operator's driver-local ceiling (every scale the oracle
+    runs at) the peel finishes in numpy after one bounded collect of
+    the pinned edge set; above it every round is an equi-shuffle
+    (degree count + two anti-joins), so node-bucketed edges make
+    rounds exchange-free at scale."""
     li = Catalog(spark, sf_dir).lineitem
     edges = G.cooccurrence_edges(
         li.select("l_orderkey", "l_partkey").distinct(),

@@ -16,6 +16,7 @@ from climate_anomaly_bigdata_pipeline_spark.operators import anomaly as A
 from climate_anomaly_bigdata_pipeline_spark.operators import relational as R
 from climate_anomaly_bigdata_pipeline_spark.operators import timeseries as TS
 from climate_anomaly_bigdata_pipeline_spark.sources import text_formats as TF
+from tests.graph_paths import GRAPH_PATHS, graph_path
 
 _SETTINGS = dict(
     max_examples=12,
@@ -288,14 +289,18 @@ def test_flac_roundtrip_arbitrary_pcm(pcm, block_size):
 def test_kcore_matches_brute_peeling_on_random_graphs(spark, edges, k):
     """k_core must equal brute-force Python peeling for ANY small
     graph and any k — the fixpoint semantics, not just the happy path
-    of the fixed fixture."""
+    of the fixed fixture — on the driver-local and the distributed
+    path alike."""
     from climate_anomaly_bigdata_pipeline_spark.operators.graph import k_core
 
     edges = [(u, v) for u, v in edges if u != v]
     if not edges:
         return
     df = spark.createDataFrame(edges, "u long, v long")
-    got = {(r.node, r.degree) for r in k_core(df, k=k).collect()}
+    got = {}
+    for path in GRAPH_PATHS:
+        with graph_path(path):
+            got[path] = {(r.node, r.degree) for r in k_core(df, k=k).collect()}
 
     adj: dict[int, set[int]] = {}
     for u, v in edges:
@@ -309,4 +314,4 @@ def test_kcore_matches_brute_peeling_on_random_graphs(spark, edges, k):
                 adj[m].discard(n)
             changed = True
     want = {(n, len(ns)) for n, ns in adj.items()}
-    assert got == want
+    assert got == {path: want for path in GRAPH_PATHS}

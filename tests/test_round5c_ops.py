@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from climate_anomaly_bigdata_pipeline_spark.operators.relational import running_total
 from climate_anomaly_bigdata_pipeline_spark.queries import QUERIES
+from tests.graph_paths import GRAPH_PATHS, graph_path
 from tests.oracle_utils import run_check
 
 
@@ -117,6 +118,92 @@ def test_kcore_brute_parity_small_graph(spark):
             changed = True
     want = {(n, len(ns)) for n, ns in adj.items()}
     assert got == want
+
+
+def _chain(spark, n, node_type="long"):
+    """Path 0-1-...-(n-1) plus a triangle on 0: the 2-core peel eats the
+    chain one end node per round, so it takes n - 3 rounds to reach the
+    triangle."""
+    edges = [(i, i + 1) for i in range(n - 1)] + [(0, 2)]
+    if node_type == "string":
+        edges = [(f"n{u:03d}", f"n{v:03d}") for u, v in edges]
+    return spark.createDataFrame(edges, f"u {node_type}, v {node_type}")
+
+
+def test_kcore_paths_agree_when_max_rounds_truncates(spark):
+    """A chain longer than max_rounds: both paths stop after the same
+    number of synchronous rounds, with identical rows, kcore_rounds and
+    output types."""
+    from climate_anomaly_bigdata_pipeline_spark.operators.graph import k_core
+
+    df = _chain(spark, 20)
+    got = {}
+    for path in GRAPH_PATHS:
+        with graph_path(path):
+            core = k_core(df, k=2, max_rounds=4)
+            got[path] = (
+                sorted(tuple(r) for r in core.collect()),
+                core.kcore_rounds,
+                [(f.name, f.dataType) for f in core.schema],
+            )
+    assert got["local"] == got["distributed"]
+    rows, rounds, _ = got["local"]
+    assert rounds == 4
+    # rounds peel 19, 18, 17, 16 in turn; 15 is the new end of the chain
+    assert rows == [(0, 2), (1, 2), (2, 3)] + [(i, 2) for i in range(3, 15)] + [
+        (15, 1)
+    ]
+    full = k_core(df, k=2)
+    assert full.kcore_rounds == 17
+    assert sorted(tuple(r) for r in full.collect()) == [(0, 2), (1, 2), (2, 2)]
+
+
+def test_kcore_string_ids_take_the_distributed_path(spark, monkeypatch):
+    """Non-integral node ids never reach the numpy peel; the shuffle
+    loop still peels them correctly and keeps the string type."""
+    from climate_anomaly_bigdata_pipeline_spark.operators import graph as G
+
+    seen = []
+    real = G._local_edges
+    monkeypatch.setattr(
+        G, "_local_edges", lambda e, m=None: seen.append(real(e, m)) or seen[-1]
+    )
+    core = G.k_core(_chain(spark, 8, "string"), k=2)
+    assert seen == [None]
+    assert sorted(tuple(r) for r in core.collect()) == [
+        ("n000", 2),
+        ("n001", 2),
+        ("n002", 2),
+    ]
+    assert core.kcore_rounds == 5
+    assert core.schema["node"].dataType.simpleString() == "string"
+
+
+def test_local_kcore_job_count_does_not_grow_with_rounds(spark):
+    """The driver-local peel is a fixed few jobs (pin + one bounded
+    collect), however many rounds the peel takes: a 30-round chain and
+    a 3-round chain build with the same job count, at most 3. A return
+    to per-round jobs fails here instead of only drifting a benchmark."""
+    import uuid
+
+    from climate_anomaly_bigdata_pipeline_spark.operators.graph import k_core
+
+    sc = spark.sparkContext
+    jobs, rounds = [], []
+    for n in (33, 6):
+        df = _chain(spark, n)
+        group = f"kcore-local-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "k_core build jobs")
+        try:
+            core = k_core(df, k=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        rounds.append(core.kcore_rounds)
+    assert rounds == [30, 3]
+    assert jobs[0] == jobs[1] and jobs[0] <= 3, jobs
 
 
 @pytest.mark.parametrize(

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from climate_anomaly_bigdata_pipeline_spark.catalog import Catalog
 from climate_anomaly_bigdata_pipeline_spark.operators import graph as G
+from tests.graph_paths import graph_path
 
 
 def _mega_basket(spark):
@@ -72,7 +73,9 @@ def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark):
     rounds (``_KCORE_ROUNDS``) while the engine iterates to fixpoint.
     Assert the engine's measured depth at sf0.1 (10× the driver's
     oracle SF) stays ≥2 rounds under the unroll so a window rotation
-    or SF bump cannot silently diverge the two."""
+    or SF bump cannot silently diverge the two. The driver-local peel
+    must report the same depth as the forced-distributed loop, so the
+    guard measures the real fixpoint depth on either path."""
     from climate_anomaly_bigdata_pipeline_spark.queries.advancedq import (
         _KCORE_K,
         _KCORE_ROUNDS,
@@ -87,6 +90,9 @@ def test_kcore_fixpoint_margin_vs_unrolled_oracle(spark):
     ).select(F.col("u"), F.col("v"))
     core = G.k_core(edges, k=_KCORE_K)
     core.collect()
+    with graph_path("distributed"):
+        dist = G.k_core(edges, k=_KCORE_K)
+    assert core.kcore_rounds == dist.kcore_rounds
     assert core.kcore_rounds <= _KCORE_ROUNDS - 2, (
         f"engine peeled {core.kcore_rounds} rounds; oracle unrolls "
         f"{_KCORE_ROUNDS} — margin too thin"
